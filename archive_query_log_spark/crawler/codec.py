@@ -164,7 +164,11 @@ def validate_rows(
     stay integers < 2^53 — float64 summation is order-independent and the
     vectorized MSE/PSNR equals the scalar path bit-for-bit; rounding uses
     Python's round() per row (np.round differs in rare ties).
+
+    ``chunk`` is the rows per numpy pass; None picks it per image size.
     """
+    if chunk is not None and chunk <= 0:
+        raise ValueError(f"chunk must be a positive row count or None, got {chunk}")
     n = len(bufs)
     status = np.full(n, 404, dtype=np.int32)
     psnr_db = np.zeros(n, dtype=np.float64)

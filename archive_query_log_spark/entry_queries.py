@@ -2953,7 +2953,7 @@ def wsrb_rules_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q("w4_reference_rules", _rule_corpus_oracle_sql())
 def w4_reference_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.9 for real: all three reference rule tables (1,463 rules) through
-    the zero-shuffle array cascade plan over a 4,129-URL corpus covering
+    the Arrow-batched cascade kernel over a 4,129-URL corpus covering
     every reachable rule (parsers/url_query.py:216-5916,
     url_page.py:60-2711, url_offset.py:60-571 as DATA; engine =
     operators/cascade.py — all three plans equality-tested in

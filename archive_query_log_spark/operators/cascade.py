@@ -6,18 +6,30 @@ parse returns non-null, wins; no-match still yields a progress update
 (/root/reference/archive_query_log/parsers/url_query.py:49-59 applicability,
 :107-174 cascade; same pattern in url_page.py / url_offset.py).
 
-Spark-first design: the rule table is DATA (a Python list compiled once, or a
-broadcast table unrolled), and the whole cascade compiles to ONE ``coalesce``
-over per-rule ``when(applicable, extract)`` expressions — the 972-rule
-url→query cascade becomes a single whole-stage-codegen projection instead of
-a per-row Python loop. Rules here are OUR OWN fixtures; the reference's rule
+The rule table is DATA. The production plan, ``apply_cascade_array``,
+collects it once on the driver and runs the whole cascade as ONE
+Arrow-batched Python UDF that executes the reference's own per-row loop
+(``re`` patterns, ``urlsplit`` + ``parse_qsl`` / ``unquote``,
+clean_text / clean_int) over only the url and provider columns: a map-only
+scan → project plan with no join and no exchange. Re-expressing the same
+loop in Catalyst (a higher-order-function fold with a percent-decoder and
+``parse_qsl`` built from hundreds of regex expressions) spent most of its
+time planning and ran uncompiled; the Python kernel is both faster and
+exact by construction. ``compile_cascade`` (an unrolled ``coalesce`` of
+per-rule ``when(applicable, extract)`` column expressions, for small rule
+lists) and ``apply_cascade_join`` (the hits relation) are the column-
+expression plans. Rules here are OUR OWN fixtures; the reference's rule
 tables are data files a deployment would import, not code to copy.
 """
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
+from functools import lru_cache
+from urllib.parse import parse_qsl, unquote, urlsplit
 
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -148,14 +160,129 @@ _RULE_FIELDS = (
     "remove_pattern", "space_pattern",
 )
 
-# the rule-struct DDL, derived from _RULE_FIELDS so the two never drift
-_RULE_ARRAY_TYPE = (
-    "array<struct<"
-    + ",".join(
-        f"{f}:{'int' if f == 'rule_order' else 'string'}" for f in _RULE_FIELDS
+_INT64_MIN, _INT64_MAX = -(1 << 63), (1 << 63) - 1
+
+
+@lru_cache(maxsize=4096)
+def _regex(pattern: str) -> re.Pattern:
+    """Compiled rule regex, cached per Python worker process (the kernel's
+    closure is unpickled per task; the compiled patterns outlive it). The
+    bound is a few times the largest rule table."""
+    return re.compile(pattern)
+
+
+def _qsl_first(qs: str, parameter: str) -> str | None:
+    for key, value in parse_qsl(qs):
+        if key == parameter:
+            return value
+    return None
+
+
+def _clean_text(
+    text: str, remove_pattern: str | None, space_pattern: str | None
+) -> str | None:
+    """parsers/utils/__init__.py:5-18 (clean_text), verbatim semantics."""
+    if remove_pattern is not None:
+        text = _regex(remove_pattern).sub("", text)
+    if space_pattern is not None:
+        text = _regex(space_pattern).sub(" ", text)
+    text = " ".join(text.strip().split())
+    return text or None
+
+
+def _clean_int(text: str, remove_pattern: str | None) -> int | None:
+    """parsers/utils/__init__.py:21-33 (clean_int), verbatim semantics —
+    except that a value outside bigint range counts as no parse (the
+    output column is bigint)."""
+    if remove_pattern is not None:
+        text = _regex(remove_pattern).sub("", text)
+    try:
+        value = int(text.strip())
+    except ValueError:
+        return None
+    return value if _INT64_MIN <= value <= _INT64_MAX else None
+
+
+def _first_hit(rules: tuple, url: str, as_int: bool):
+    """The reference's first-match loop (url_query.py:118-126) for one URL:
+    (value, rule_order) of the first applicable rule whose cleaned parse is
+    non-null, else None. The URL is split at most once, and only when some
+    rule's pattern applies."""
+    parts = None
+    for order, rule_type, arg, url_pattern, remove_pattern, space_pattern in rules:
+        if url_pattern is not None and _regex(url_pattern).search(url) is None:
+            continue
+        if parts is None:
+            try:
+                parts = urlsplit(url)
+            except ValueError:  # e.g. an unbalanced IPv6 bracket
+                return None
+        if rule_type == "query_param":
+            raw = _qsl_first(parts.query, arg)
+        elif rule_type == "fragment_param":
+            raw = _qsl_first(parts.fragment, arg)
+        else:  # path_segment
+            segments = parts.path.split("/")
+            raw = unquote(segments[arg]) if len(segments) > arg else None
+        if raw is None:
+            continue
+        value = (
+            _clean_int(raw, remove_pattern)
+            if as_int
+            else _clean_text(raw, remove_pattern, space_pattern)
+        )
+        if value is not None:
+            return value, order
+    return None
+
+
+def _cascade_batch(
+    urls: pa.Array, providers: pa.Array, by_provider: dict, universal: tuple,
+    as_int: bool,
+) -> pa.Array:
+    """One Arrow batch through the cascade → struct<v, o>."""
+    values, orders = [], []
+    for url, provider in zip(urls.to_pylist(), providers.to_pylist()):
+        hit = None
+        if url is not None:
+            hit = _first_hit(by_provider.get(provider, universal), url, as_int)
+        values.append(None if hit is None else hit[0])
+        orders.append(None if hit is None else hit[1])
+    return pa.StructArray.from_arrays(
+        [
+            pa.array(values, type=pa.int64() if as_int else pa.string()),
+            pa.array(orders, type=pa.int32()),
+        ],
+        names=["v", "o"],
     )
-    + ">>"
-)
+
+
+def _compile_rule_lists(rules_df) -> tuple[dict, tuple]:
+    """Collect the rule table once and compile it into per-provider rule
+    tuples in rule_order, universal (null-provider) rules merged into every
+    provider's list. The universal list alone serves unknown and null
+    providers."""
+    rows = sorted(
+        rules_df.select("provider_id", *_RULE_FIELDS).collect(),
+        key=lambda r: r["rule_order"],
+    )
+    by_provider: dict[str | None, list] = {}
+    for r in rows:
+        if r["rule_type"] not in ("query_param", "fragment_param", "path_segment"):
+            raise ValueError(r["rule_type"])
+        arg = int(r["argument"]) if r["rule_type"] == "path_segment" else r["argument"]
+        by_provider.setdefault(r["provider_id"], []).append(
+            (
+                r["rule_order"], r["rule_type"], arg, r["url_pattern"],
+                r["remove_pattern"], r["space_pattern"],
+            )
+        )
+    universal = by_provider.pop(None, [])
+    merged = {
+        p: tuple(sorted(rules + universal, key=lambda rule: rule[0]))
+        for p, rules in by_provider.items()
+    }
+    return merged, tuple(universal)
 
 
 def apply_cascade_array(
@@ -167,136 +294,35 @@ def apply_cascade_array(
     as_int: bool = False,
     out_rule_col: str | None = None,
 ):
-    """The ZERO-SHUFFLE scale plan: broadcast a per-provider ARRAY of rule
-    structs (universal rules merged into every provider's array, global
-    rule_order preserved by the sort), left-broadcast-join it onto the rows,
-    then evaluate the whole first-match cascade as ONE projection with
-    higher-order functions — transform(rules, r → cleaned extract) then
-    first non-null. No groupBy, no join-back: the plan is scan → broadcast
-    join → project, so it composes into any pipeline without adding an
-    exchange (apply_cascade_join needs 3: winner agg + both join-back
-    sides). Per-row cost is identical (rules-per-provider evaluations).
-    Equality-tested against apply_cascade_join and compile_cascade on the
-    reference's real rule tables."""
-    spec = rules_df.where(F.col("provider_id").isNotNull())
-    univ_rows = (
-        rules_df.where(F.col("provider_id").isNull())
-        .select(*_RULE_FIELDS)
-        .collect()
-    )
+    """The whole first-match cascade as ONE Arrow-batched Python UDF.
 
-    def _lit_rule(r):
-        return F.struct(
-            *[
-                (
-                    F.lit(r[f]).alias(f)
-                    if r[f] is not None
-                    else F.lit(None).cast("int" if f == "rule_order" else "string").alias(f)
-                )
-                for f in _RULE_FIELDS
-            ]
-        )
+    ``rules_df`` (rule_order, rule_type, argument, provider_id, url_pattern,
+    remove_pattern, space_pattern; url_pattern is find-anywhere, see
+    ``rule_tables.match_anchored``) is collected once on the driver and
+    compiled into per-provider rule lists that ride in the UDF's closure.
+    Per row the kernel runs the reference's own loop — ``re.search`` on
+    url_pattern, ``urlsplit`` + ``parse_qsl`` / ``unquote`` extraction,
+    clean_text / clean_int — so the output is the reference parser's, not a
+    re-expression of it in Catalyst. A URL ``urlsplit`` rejects yields no
+    parse. Only the url and provider columns cross into Python; the plan is
+    scan → project (ArrowEvalPython) → project, with no join and no
+    exchange. Input URLs must already be pydantic-normalized (see
+    rule_tables). Adds ``out_col`` (string, or bigint with ``as_int``) and,
+    if given, ``out_rule_col`` (int: the winning rule_order, null when no
+    rule parsed)."""
+    by_provider, universal = _compile_rule_lists(rules_df)
 
-    univ_arr = (
-        F.array(*[_lit_rule(r) for r in univ_rows])
-        if univ_rows
-        else F.array().cast(_RULE_ARRAY_TYPE)
-    )
-    # sort each provider's rules ONCE in the pack aggregation (array_sort on
-    # structs orders by the first field, rule_order) — the per-row plan used
-    # to re-sort the concatenated array for every input row
-    packed = spec.groupBy(F.col("provider_id").alias("_rp")).agg(
-        F.array_sort(F.collect_list(F.struct(*_RULE_FIELDS))).alias("_prules")
-    )
-    # Per-row URL components hoisted OUT of the per-rule lambda: the old
-    # plan re-ran lenient_url + try_parse_url(QUERY/REF/PATH) inside every
-    # rule's branch (Catalyst does no CSE across higher-order-function
-    # lambda invocations), so a row visited by k rules parsed its URL up to
-    # k times. One projection per row now carries the sanitized URL, query
-    # string, fragment and path segments; the rules only run the per-rule
-    # match + qsl lookup over those.
-    lenient = U.lenient_url(F.col("_url"))
-    joined = (
-        df.withColumn("_url", url)
-        .withColumn("_prov", provider)
-        .join(
-            F.broadcast(packed), on=F.col("_prov") == F.col("_rp"), how="left"
-        )
-        .withColumn("_lu", lenient)
-        .withColumn("_q", F.try_parse_url(F.col("_lu"), F.lit("QUERY")))
-        .withColumn("_ref", F.try_parse_url(F.col("_lu"), F.lit("REF")))
-        .withColumn(
-            "_psegs",
-            F.split(
-                F.coalesce(
-                    F.try_parse_url(F.col("_lu"), F.lit("PATH")), F.lit("")
-                ),
-                "/",
-            ),
-        )
-    )
-    # merge universal rules in, restore GLOBAL cascade order; with no
-    # universal rules (the real url_query/url_page/url_offset tables) the
-    # pre-sorted per-provider array is used as-is — no per-row sort/concat
-    empty_arr = F.array().cast(_RULE_ARRAY_TYPE)
-    if univ_rows:
-        rules_arr = F.array_sort(
-            F.concat(F.coalesce(F.col("_prules"), empty_arr), univ_arr)
-        )
-    else:
-        rules_arr = F.coalesce(F.col("_prules"), empty_arr)
+    def cascade_batch(urls: pa.Array, providers: pa.Array) -> pa.Array:
+        return _cascade_batch(urls, providers, by_provider, universal, as_int)
 
-    # First-match via a SHORT-CIRCUITING fold (guide §1.2: fix the per-task
-    # work once the job shape is right): the old filter(transform(rules))
-    # plan evaluated EVERY rule for every row — pattern match, dynamic-regex
-    # compile, qsl parse — and only then took element 0. aggregate() walks
-    # the same rule order, but once the accumulator holds a hit the
-    # when() guard skips the whole evaluation branch, so a row costs
-    # (rules until first hit) instead of (all rules). Identical first-
-    # non-null-by-rule_order semantics (equality-tested vs compile_cascade
-    # and apply_cascade_join on the real tables).
-    vtype = "long" if as_int else "string"
-    zero = F.struct(
-        F.lit(None).cast(vtype).alias("v"), F.lit(None).cast("int").alias("o")
+    kernel = F.arrow_udf(
+        cascade_batch, f"struct<v:{'bigint' if as_int else 'string'},o:int>"
     )
-
-    def _step(acc, r):
-        applicable = r["url_pattern"].isNull() | F.regexp_like(
-            F.col("_url"), r["url_pattern"]
-        )
-        qp = U.parse_qsl_first(F.col("_q"), r["argument"])
-        fp = U.parse_qsl_first(F.col("_ref"), r["argument"])
-        seg = U.percent_decode(
-            F.try_element_at(F.col("_psegs"), r["argument"].cast("int") + 1)
-        )
-        raw = (
-            F.when(r["rule_type"] == "query_param", qp)
-            .when(r["rule_type"] == "fragment_param", fp)
-            .when(r["rule_type"] == "path_segment", seg)
-        )
-        cleaned = _clean_dynamic(
-            raw, r["remove_pattern"], r["space_pattern"], as_int
-        )
-        val = F.when(applicable, cleaned).cast(vtype)
-        return F.when(acc["v"].isNotNull(), acc).otherwise(
-            F.struct(val.alias("v"), r["rule_order"].alias("o"))
-        )
-
-    # bind the fold result as a column so the v/o projections reference ONE
-    # evaluation (CollapseProject keeps non-cheap aliased exprs unduplicated)
-    out = joined.withColumn("_cacc", F.aggregate(rules_arr, zero, _step))
-    first = F.col("_cacc")
-    out = out.withColumn(out_col, first["v"])
+    out = df.withColumn("_cacc", kernel(url.cast("string"), provider.cast("string")))
+    out = out.withColumn(out_col, F.col("_cacc.v"))
     if out_rule_col is not None:
-        # o is only meaningful when a rule actually hit (the fold leaves the
-        # last TRIED rule's order behind on a miss)
-        out = out.withColumn(
-            out_rule_col, F.when(first["v"].isNotNull(), first["o"])
-        )
-    return out.drop(
-        "_url", "_prov", "_rp", "_prules", "_lu", "_q", "_ref", "_psegs",
-        "_cacc",
-    )
+        out = out.withColumn(out_rule_col, F.col("_cacc.o"))
+    return out.drop("_cacc")
 
 
 def apply_cascade_join(

@@ -7,15 +7,17 @@ DATA extracted verbatim from the reference's public, MIT-licensed tables
 url_page.py:60-2711, url_offset.py:60-571) by
 ``tools/extract_reference_rules.py``. This module turns them into
 
-- a broadcast-ready rules DataFrame for
-  :func:`archive_query_log_spark.operators.cascade.apply_cascade_join`
-  (the scale plan: per-row cost = rules-per-provider, not all-rules), and
+- a rules DataFrame for
+  :func:`archive_query_log_spark.operators.cascade.apply_cascade_array`
+  (the production plan: the table is collected once and runs as one
+  Arrow-batched Python kernel; per-row cost = rules-per-provider), and
 - ``UrlRule`` lists for :func:`compile_cascade` (the unrolled-coalesce plan,
   useful for small per-provider subsets).
 
 Match-semantics shim: the reference applies ``url_pattern`` with
-``re.match`` (anchored at position 0, url_query.py:54-58); Spark ``rlike``
-and DuckDB ``regexp_matches`` are find-anywhere, so every pattern is wrapped
+``re.match`` (anchored at position 0, url_query.py:54-58); ``re.search``
+(the apply_cascade_array kernel), Spark ``rlike`` and DuckDB
+``regexp_matches`` are find-anywhere, so every pattern is wrapped
 as ``^(?:...)`` here (wrapping, not just prefixing, keeps top-level
 alternations anchored).
 
@@ -90,8 +92,9 @@ def load_rule_rows(table: str) -> tuple[dict, ...]:
 
 
 def reference_rules_df(spark: SparkSession, table: str) -> DataFrame:
-    """Rule table as a (tiny, broadcastable) DataFrame with url_pattern
-    wrapped for find-anywhere engines — feed straight to apply_cascade_join.
+    """Rule table as a (tiny) DataFrame with url_pattern wrapped for
+    find-anywhere engines — feed straight to apply_cascade_array (or
+    apply_cascade_join).
     """
     records = [
         {

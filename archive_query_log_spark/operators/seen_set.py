@@ -56,6 +56,25 @@ SHARD_SCHEMA = StructType(
 )
 
 
+# Bloom bit-position layout, recorded per shard row (column ``pl``) like the
+# bucketing modulus: 0 = g_i = h1 + i·h2 (legacy — h1 also picks the bucket,
+# so every key of a bucket shares h1's low bits and the first position only
+# reaches 1/n_buckets of the bitmap); 1 = the same double hashing from h1
+# rotated by 32 bits, whose low bits do not pick the bucket. Shards without
+# the column are layout 0; update_bloom_shards rebuilds them.
+BLOOM_LAYOUT = 1
+
+BLOOM_SHARD_SCHEMA = StructType(
+    SHARD_SCHEMA.fields + [StructField("pl", IntegerType(), False)]
+)
+
+
+def _with_position_layout(shards: DataFrame) -> DataFrame:
+    if "pl" in shards.columns:
+        return shards
+    return shards.withColumn("pl", F.lit(0))
+
+
 def _shard_n_buckets(shards: DataFrame) -> int:
     return int(shards.select("nb").first()["nb"])
 
@@ -65,7 +84,9 @@ def _bloom_build_pdf(pdf: pd.DataFrame, cfg: "BloomConfig") -> pd.DataFrame:
     single copy of the sizing rule keeps the two paths bit-compatible)."""
     n = len(pdf)
     m = max(cfg.min_bits, 1 << int(np.ceil(np.log2(max(1, n) * cfg.bits_per_key))))
-    pos = _bloom_positions(pdf["_h1"].to_numpy(), pdf["_h2"].to_numpy(), cfg.k, m)
+    pos = _bloom_positions(
+        pdf["_h1"].to_numpy(), pdf["_h2"].to_numpy(), cfg.k, m, BLOOM_LAYOUT
+    )
     bits = np.zeros(m // 8, dtype=np.uint8)
     flat = pos.ravel()
     np.bitwise_or.at(bits, flat // 8, (1 << (flat % 8)).astype(np.uint8))
@@ -77,6 +98,7 @@ def _bloom_build_pdf(pdf: pd.DataFrame, cfg: "BloomConfig") -> pd.DataFrame:
             "k": [cfg.k],
             "n": [n],
             "nb": [cfg.n_buckets],
+            "pl": [BLOOM_LAYOUT],
         }
     )
 
@@ -125,12 +147,18 @@ def with_hashes(df: DataFrame, key_col: str, n_buckets: int) -> DataFrame:
     )
 
 
-def _bloom_positions(h1: np.ndarray, h2: np.ndarray, k: int, m: int) -> np.ndarray:
-    """(len, k) bit positions via double hashing g_i = h1 + i·h2 mod m."""
+def _bloom_positions(
+    h1: np.ndarray, h2: np.ndarray, k: int, m: int, layout: int
+) -> np.ndarray:
+    """(len, k) bit positions via double hashing g_i = a + i·h2 mod m, with
+    a = h1 (layout 0) or h1 rotated by 32 bits (layout 1, BLOOM_LAYOUT)."""
     i = np.arange(k, dtype=np.uint64)
-    return (
-        h1.astype(np.uint64)[:, None] + i[None, :] * h2.astype(np.uint64)[:, None]
-    ) % np.uint64(m)
+    a = h1.astype(np.uint64)
+    if layout == 1:
+        a = (a >> np.uint64(32)) | (a << np.uint64(32))
+    elif layout != 0:
+        raise ValueError(f"unknown bloom position layout {layout}")
+    return (a[:, None] + i[None, :] * h2.astype(np.uint64)[:, None]) % np.uint64(m)
 
 
 @dataclass
@@ -156,7 +184,7 @@ def build_bloom_shards(
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         return _bloom_build_pdf(pdf, cfg)
 
-    return hashed.groupBy("bucket").applyInPandas(build, SHARD_SCHEMA)
+    return hashed.groupBy("bucket").applyInPandas(build, BLOOM_SHARD_SCHEMA)
 
 
 # Auto layout cutover: broadcast the shard set while its total blob bytes
@@ -293,7 +321,7 @@ def _probe_with_layout(
 def _bloom_kernel(ent: dict, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
     bits = np.frombuffer(ent["bits"], dtype=np.uint8)
     m, k = int(ent["m"]), int(ent["k"])
-    pos = _bloom_positions(h1, h2, k, m)
+    pos = _bloom_positions(h1, h2, k, m, int(ent["pl"]))
     return ((bits[pos // 8] & (1 << (pos % 8)).astype(np.uint8)) != 0).all(axis=1)
 
 
@@ -322,9 +350,9 @@ def bloom_probe(
     dict (up to the 256 MB cutover) per probe adds up over a 10^4-round
     crawl. ``filtered_new`` does this housekeeping itself."""
     probed, bc = _probe_with_layout(
-        batch, shards, key_col, n_buckets, broadcast_shards,
-        ("bits", "m", "k"), _bloom_kernel, _bloom_size_bytes,
-        shard_size_bytes=shard_size_bytes,
+        batch, _with_position_layout(shards), key_col, n_buckets,
+        broadcast_shards, ("bits", "m", "k", "pl"), _bloom_kernel,
+        _bloom_size_bytes, shard_size_bytes=shard_size_bytes,
     )
     if bc is not None and broadcast_out is not None:
         broadcast_out.append(bc)
@@ -346,9 +374,12 @@ def update_bloom_shards(
     10^10 keys; this path is O(|new| + rebuilt buckets).
 
     Guarantee preserved: zero false negatives (OR only adds bits; rebuilds
-    re-insert every key of the bucket).
+    re-insert every key of the bucket). Shards built under an older bit-
+    position layout are rebuilt too, so no bitmap is ever probed or OR-ed
+    with a formula other than the one that built it.
     """
     cfg = cfg or BloomConfig()
+    shards = _with_position_layout(shards)
     nb = _shard_n_buckets(shards)
     if nb != cfg.n_buckets:
         raise ValueError(
@@ -366,13 +397,14 @@ def update_bloom_shards(
     # double-executed the blob-producing map to read its rebuild flags).
     counts = hashed.groupBy("bucket").agg(F.count("*").alias("n_add"))
     meta = (
-        shards.select("bucket", "m", "n")
+        shards.select("bucket", "m", "n", "pl")
         .join(counts, on="bucket", how="full_outer")
     )
     rebuild = [
         int(r["bucket"])
         for r in meta.where(
             F.col("m").isNull()  # brand-new bucket
+            | (F.col("pl") != BLOOM_LAYOUT)
             | (
                 (F.col("n") + F.coalesce(F.col("n_add"), F.lit(0)))
                 * cfg.bits_per_key
@@ -390,13 +422,14 @@ def update_bloom_shards(
 
     def or_update(shard_pdf: pd.DataFrame, adds_pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(shard_pdf):  # adds-only bucket → handled by the rebuild leg
-            return pd.DataFrame(columns=[f.name for f in SHARD_SCHEMA.fields])
+            return pd.DataFrame(columns=[f.name for f in BLOOM_SHARD_SCHEMA.fields])
         r = shard_pdf.iloc[0]
         bits, m, k, n = r["bits"], int(r["m"]), int(r["k"]), int(r["n"])
         if len(adds_pdf):
             arr = np.frombuffer(bits, dtype=np.uint8).copy()
             pos = _bloom_positions(
-                adds_pdf["_h1"].to_numpy(), adds_pdf["_h2"].to_numpy(), k, m
+                adds_pdf["_h1"].to_numpy(), adds_pdf["_h2"].to_numpy(), k, m,
+                int(r["pl"]),
             ).ravel()
             np.bitwise_or.at(arr, pos // 8, (1 << (pos % 8)).astype(np.uint8))
             bits, n = arr.tobytes(), n + len(adds_pdf)
@@ -408,13 +441,14 @@ def update_bloom_shards(
                 "k": [k],
                 "n": [n],
                 "nb": [int(r["nb"])],
+                "pl": [int(r["pl"])],
             }
         )
 
     updated = (
         kept_shards.groupBy("bucket")
         .cogroup(kept_adds.groupBy("bucket"))
-        .applyInPandas(or_update, SHARD_SCHEMA)
+        .applyInPandas(or_update, BLOOM_SHARD_SCHEMA)
     )
     if not rebuild:
         return updated
@@ -426,7 +460,7 @@ def update_bloom_shards(
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         return _bloom_build_pdf(pdf, cfg)
 
-    rebuilt = rb_keys.groupBy("bucket").applyInPandas(build, SHARD_SCHEMA)
+    rebuilt = rb_keys.groupBy("bucket").applyInPandas(build, BLOOM_SHARD_SCHEMA)
     return updated.unionByName(rebuilt)
 
 
@@ -792,9 +826,9 @@ def filtered_new(
     if shards is None or seen is None:
         return exact_new(batch, seen, key_col)
     probed, bc = _probe_with_layout(
-        batch, shards, key_col, n_buckets, broadcast_shards,
-        ("bits", "m", "k"), _bloom_kernel, _bloom_size_bytes,
-        shard_size_bytes=shard_size_bytes,
+        batch, _with_position_layout(shards), key_col, n_buckets,
+        broadcast_shards, ("bits", "m", "k", "pl"), _bloom_kernel,
+        _bloom_size_bytes, shard_size_bytes=shard_size_bytes,
     )
     if checkpoint:
         probed = probed.localCheckpoint()

@@ -16,6 +16,25 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+MAX_DRIVER_MEMORY_MB = 24 * 1024
+
+
+def default_driver_memory(mem_total_bytes: int | None = None) -> str:
+    """Driver heap default: half the machine's physical memory, capped at
+    24g. A fixed 24g heap on a 16 GB machine lets the local-mode JVM grow
+    until the kernel kills it; half leaves room for the Python workers and
+    the JVM's off-heap memory. ``mem_total_bytes`` defaults to this
+    machine's; if it cannot be read, the cap is used."""
+    if mem_total_bytes is None:
+        try:
+            mem_total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (ValueError, OSError, AttributeError):
+            mem_total_bytes = 0
+    if mem_total_bytes <= 0:
+        return f"{MAX_DRIVER_MEMORY_MB}m"
+    half_mb = mem_total_bytes // 2 // (1 << 20)
+    return f"{max(1, min(MAX_DRIVER_MEMORY_MB, half_mb))}m"
+
 
 def get_spark(
     app_name: str = "archive-query-log-spark",
@@ -64,7 +83,10 @@ def get_spark(
         )
         # binary image payloads serialize poorly with the default codec
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     # Shuffle/spill scratch space. On shared sandboxes the default /tmp is

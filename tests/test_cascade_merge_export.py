@@ -42,6 +42,66 @@ def test_cascade_golden(spark):
         assert got[(p, u)] == (q, pg), (p, u)
 
 
+def test_cascade_array_kernel_equals_coalesce_plan(spark):
+    """apply_cascade_array (the Arrow-batched kernel production runs) on the
+    fixture tables — the only ones with a universal rule — agrees with the
+    coalesce plan and the goldens, incl. null-url and null-provider rows
+    (a null provider still gets the universal rules) and the winning rule
+    index."""
+    extra = [
+        (None, "https://x.example/?search=no+provider", "no provider", None),
+        ("alpha", None, None, None),
+        (None, None, None, None),
+        ("alpha", "https://a.example/?search=fb&page=2", "fb", 2),
+    ]
+    rows = CASCADE_GOLDEN + extra
+    df = spark.createDataFrame(
+        [(i, p, u) for i, (p, u, _, _) in enumerate(rows)],
+        "rid long, provider string, url string",
+    )
+    out = cascade.apply_cascade_array(
+        df, cascade.rules_to_df(spark, cascade.FIXTURE_QUERY_RULES),
+        F.col("url"), F.col("provider"), out_rule_col="q_rule",
+    )
+    out = cascade.apply_cascade_array(
+        out, cascade.rules_to_df(spark, cascade.FIXTURE_PAGE_RULES),
+        F.col("url"), F.col("provider"), out_col="page", as_int=True,
+    ).select(
+        "rid", "query", "page", "q_rule",
+        cascade.compile_cascade(
+            cascade.FIXTURE_QUERY_RULES, F.col("url"), F.col("provider")
+        ).alias("cq"),
+        cascade.compile_cascade(
+            cascade.FIXTURE_PAGE_RULES, F.col("url"), F.col("provider"),
+            as_int=True,
+        ).alias("cp"),
+    )
+    assert dict(out.dtypes)["page"] == "bigint"
+    assert dict(out.dtypes)["q_rule"] == "int"
+    got = {r["rid"]: r for r in out.collect()}
+    for i, (_, _, q, pg) in enumerate(rows):
+        r = got[i]
+        assert (r["query"], r["page"]) == (q, pg) == (r["cq"], r["cp"]), (i, r)
+    assert [got[i]["q_rule"] for i in range(len(rows))] == [
+        0, 1, 2, 3, 4, None, 4, None, None, 4,
+    ]
+    # a universal rule AHEAD of a provider rule keeps its precedence once
+    # merged into that provider's list
+    rules = [
+        cascade.UrlRule("query_param", "search"),
+        cascade.UrlRule("query_param", "q", provider_id="alpha"),
+    ]
+    both = spark.createDataFrame(
+        [("alpha", "https://a.example/?q=specific&search=universal")],
+        "provider string, url string",
+    )
+    r = cascade.apply_cascade_array(
+        both, cascade.rules_to_df(spark, rules), F.col("url"), F.col("provider"),
+        out_rule_col="rule",
+    ).first()
+    assert (r["query"], r["rule"]) == ("universal", 0)
+
+
 def test_cascade_join_plan_equals_coalesce_plan(spark):
     """apply_cascade_join (the 972-rule-scale plan) must produce exactly the
     coalesce plan's results — incl. percent decoding, fragment params,

@@ -1,6 +1,7 @@
 """Deterministic codec contract: roundtrip, lossy PSNR bounds, phash."""
 
 import numpy as np
+import pytest
 
 from archive_query_log_spark.crawler import codec
 
@@ -52,13 +53,8 @@ def test_validate_row_verdicts():
     assert mismatched[0] == 422
 
 
-def test_validate_rows_matches_scalar_verdicts():
-    """Differential gate for the vectorized batch validator (two-stage
-    block sums, packbits phash, adaptive chunking): every verdict column
-    must equal the scalar validate_row path across formats, image sizes
-    (incl. non-multiple-of-8), and every fallback edge — dead link, bad
-    magic, truncated zlib, stored-shape mismatch, wrong caption/phash,
-    corrupted pixels."""
+def _parity_rows():
+    """Rows covering every verdict path of validate_row."""
     rows = []
     for i in range(600):
         iid = f"img-par-{i % 60:05d}"
@@ -86,6 +82,10 @@ def test_validate_rows_matches_scalar_verdicts():
             px2[0, 0] ^= 0xFF
             buf = codec.encode(px2, fmt)
         rows.append((iid, buf, w, h, fmt, cap, ph))
+    return rows
+
+
+def _assert_matches_scalar(rows, chunk=None):
     status, psnr_db, psnr_ok, caption_ok, phash_ok = codec.validate_rows(
         [r[1] for r in rows],
         [r[0] for r in rows],
@@ -94,6 +94,7 @@ def test_validate_rows_matches_scalar_verdicts():
         [r[4] for r in rows],
         [r[5] for r in rows],
         [r[6] for r in rows],
+        chunk=chunk,
     )
     for j, (iid, buf, w, h, fmt, cap, ph) in enumerate(rows):
         if buf is None:
@@ -108,3 +109,28 @@ def test_validate_rows_matches_scalar_verdicts():
             bool(phash_ok[j]),
         )
         assert got == exp, (j, iid, fmt, got, exp)
+
+
+def test_validate_rows_matches_scalar_verdicts():
+    """Differential gate for the vectorized batch validator (two-stage
+    block sums, packbits phash, adaptive chunking): every verdict column
+    must equal the scalar validate_row path across formats, image sizes
+    (incl. non-multiple-of-8), and every fallback edge — dead link, bad
+    magic, truncated zlib, stored-shape mismatch, wrong caption/phash,
+    corrupted pixels."""
+    _assert_matches_scalar(_parity_rows())
+
+
+def test_validate_rows_multi_chunk_parity():
+    """A chunk size that splits every (w, h) group into several numpy
+    passes, with a ragged last chunk, yields the scalar verdicts too."""
+    _assert_matches_scalar(_parity_rows(), chunk=7)
+
+
+def test_validate_rows_rejects_non_positive_chunk():
+    """chunk=0 is not "adaptive": only None is."""
+    rows = _parity_rows()[:3]
+    args = [[r[i] for r in rows] for i in (1, 0, 2, 3, 4, 5, 6)]
+    for bad in (0, -1):
+        with pytest.raises(ValueError):
+            codec.validate_rows(*args, chunk=bad)

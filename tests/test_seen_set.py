@@ -1,6 +1,9 @@
 """Seen-set invariants: bloom-filtered novelty must equal the exact
 anti-join (zero false negatives; false positives resolved exactly)."""
 
+import math
+
+import numpy as np
 from pyspark.sql import functions as F
 
 from archive_query_log_spark.crawler import synth
@@ -200,3 +203,48 @@ def test_pipeline_commit_stashes_shard_bytes(spark, tmp_path):
             state.seen_shards.read(spark, m["version"]), "bloom"
         )
         assert stashed == fresh > 0
+
+
+def test_bloom_false_positive_rate_meets_config(spark):
+    """Bit positions must not depend on the hash bits that choose the
+    bucket: with g_0 = h1 mod m every key of a bucket shared h1's low bits,
+    so the first probe bit came from 1/n_buckets of the bitmap and the FP
+    rate was ~20x BloomConfig's target."""
+    cfg = seen_set.BloomConfig()
+    keys = spark.range(50_000).select(F.sha2(F.col("id").cast("string"), 256).alias("url_key"))
+    others = spark.range(50_000, 150_000).select(
+        F.sha2(F.col("id").cast("string"), 256).alias("url_key")
+    )
+    shards = seen_set.build_bloom_shards(keys, "url_key", cfg).cache()
+    assert shards.where(F.col("pl") != seen_set.BLOOM_LAYOUT).count() == 0
+    assert seen_set.bloom_probe(keys, shards, "url_key").where(~F.col("maybe_seen")).count() == 0
+    fp = seen_set.bloom_probe(others, shards, "url_key").where(F.col("maybe_seen")).count()
+    target = (1 - math.exp(-cfg.k / cfg.bits_per_key)) ** cfg.k
+    assert fp / 100_000 <= 2 * target, (fp, target)
+
+
+def test_legacy_layout_shards_are_probed_as_built_and_rebuilt_on_update(spark):
+    """Shards written before the layout column existed keep their own
+    formula when probed (no false negatives) and are rebuilt, never OR-ed
+    into, by the next update."""
+    cfg = seen_set.BloomConfig(n_buckets=8)
+    keys = spark.createDataFrame([(f"k{i}",) for i in range(3000)], "url_key string")
+    old, new = keys.where(F.col("url_key") < "k2"), keys.where(F.col("url_key") >= "k2")
+    hashed = seen_set.with_hashes(old, "url_key", cfg.n_buckets).toPandas()
+    rows = []
+    for b, grp in hashed.groupby("bucket"):
+        m = cfg.min_bits
+        pos = seen_set._bloom_positions(
+            grp["_h1"].to_numpy(), grp["_h2"].to_numpy(), cfg.k, m, 0
+        ).ravel()
+        bits = np.zeros(m // 8, dtype=np.uint8)
+        np.bitwise_or.at(bits, pos // 8, (1 << (pos % 8)).astype(np.uint8))
+        rows.append((int(b), bits.tobytes(), m, cfg.k, len(grp), cfg.n_buckets))
+    legacy = spark.createDataFrame(rows, seen_set.SHARD_SCHEMA)
+    probed = seen_set.bloom_probe(old, legacy, "url_key")
+    assert probed.where(~F.col("maybe_seen")).count() == 0
+    updated = seen_set.update_bloom_shards(legacy, new, keys, "url_key", cfg).cache()
+    assert {r["pl"] for r in updated.select("pl").collect()} == {seen_set.BLOOM_LAYOUT}
+    assert updated.select("bucket").distinct().count() == 8
+    probed = seen_set.bloom_probe(keys, updated, "url_key")
+    assert probed.where(~F.col("maybe_seen")).count() == 0

@@ -15,8 +15,8 @@ patterns. This script AST-parses those literals (the reference package
 itself is not importable here — it needs elasticsearch_dsl) and re-emits
 them as engine-neutral JSON rows for
 ``archive_query_log_spark/data/url_{query,page,offset}_rules.json``, which
-``operators.rule_tables`` loads into the broadcast rule table consumed by
-``operators.cascade.apply_cascade_join``.
+``operators.rule_tables`` loads into the rule table consumed by
+``operators.cascade.apply_cascade_array``.
 
 Rule DATA is imported verbatim (it is the public, MIT-licensed capability
 surface — 1,463 provider-specific extraction rules); all execution machinery

@@ -157,8 +157,9 @@ def validate_rows(
     through one numpy pass per ``chunk`` rows (chunked so the (rows × w·h)
     temporaries stay cache-sized — one big batch measured 8× slower cold
     from allocator churn); anything unusual (missing payload, bad magic,
-    truncated zlib, shape mismatch) takes the scalar ``validate_row`` path
-    so every legacy edge case keeps byte-identical verdicts.
+    truncated zlib, shape mismatch, w or h below 8) takes the scalar
+    ``validate_row`` path so every legacy edge case keeps byte-identical
+    verdicts.
 
     Exactness notes: pixel values are uint8, so squared-error partial sums
     stay integers < 2^53 — float64 summation is order-independent and the
@@ -193,9 +194,12 @@ def validate_rows(
             raw = decompress(b[9:], bufsize=wh)
             if (dw, dh) != (w, h) or len(raw) != wh:
                 raise ValueError("shape")
+            if w < 8 or h < 8:
+                raise ValueError("smaller than the 8×8 phash grid")
         except Exception:
             # scalar fallback reproduces the legacy verdict exactly (422 on
-            # bad payloads, and the odd broadcastable-shape corner cases)
+            # bad payloads and on images too small for the phash grid, and
+            # the odd broadcastable-shape corner cases)
             s, p, a, bb, c = validate_row(
                 bytes(b), image_ids[j], w, h, fmts[j], captions[j],
                 int(phashes[j]),

@@ -4,7 +4,7 @@
 The reference fetches from external archive APIs row-by-row behind a rate
 limiter (/root/reference/archive_query_log/downloaders/warc.py:85-118). Here
 the "archive" is the images table; payload validation (decode, PSNR, caption,
-phash — BASELINE.json input_hint) runs in ONE Arrow-batched mapInPandas pass.
+phash — BASELINE.json input_hint) runs in ONE Arrow-batched mapInArrow pass.
 
 Scale design — the content-addressed fetch cache:
 - Payloads are keyed by image_id (deterministic IDs, the reference's own

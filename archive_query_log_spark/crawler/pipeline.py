@@ -4,10 +4,12 @@ One crawl *round* = one batch job (the reference's own incrementality model,
 SURVEY.md §2.11 — worklist flags, not a stream processor):
 
     frontier(immutable) ⟕anti fetch-log ──▶ seen-filter (bloom → exact)
-        ──▶ robots join ──▶ politeness schedule (salted per-host waves)
-        ──▶ fetch+validate (mapInPandas over images join)
+        ──▶ robots join ──▶ politeness schedule (per-host waves,
+                            score-bucket-stitched rank)
+        ──▶ fetch+validate (mapInArrow over images join)
         ──▶ commits (append-only): fetches++, seen_keys++,
-                     seen_shards (rebuilt), metrics++
+                     seen_shards (new keys OR-ed in; only over-capacity
+                     buckets rebuilt), metrics++
 
 The frontier is never rewritten: worklist state (fetched? when?) derives
 from the appended fetch log — the reference's in-place ES flag updates
@@ -48,7 +50,6 @@ T0 = "2024-01-01 00:00:00"
 @dataclass
 class CrawlConfig:
     budget_waves: int = 8           # per-host dispatch budget per round
-    salt_partitions: int = 8        # hot-host window salting
     n_buckets: int = 32             # seen-set shard count
     seed: int = 42
     use_bloom: bool = True
@@ -229,12 +230,11 @@ def run_round(
             .withColumn("is_refresh", F.lit(True))
         )
 
-    # politeness: robots rules + salted per-host wave ranking
+    # politeness: robots rules + per-host wave ranking
     allowed = politeness.apply_robots(fresh, robots, "url", "host")
     scheduled = politeness.schedule(
         allowed.withColumn("t0", F.to_timestamp(F.lit(T0))),
         budget_waves=cfg.budget_waves,
-        salt_partitions=cfg.salt_partitions,
     ).drop("t0")
 
     # fetch + validate; cache: used for fetches commit, seen update, metrics.

@@ -2731,7 +2731,7 @@ def crawl_pipeline_round(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # §2.9 with the reference's REAL rule tables: 972 url→query + 425 url→page +
-# 66 url→offset rules through the broadcast-join cascade, hash-gated against
+# 66 url→offset rules through the Arrow-batched cascade, hash-gated against
 # goldens computed by the reference parser logic itself
 # (tools/reference_rule_oracle.py over tools/make_rule_corpus.py's corpus).
 # ---------------------------------------------------------------------------
@@ -2956,7 +2956,7 @@ def w4_reference_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Arrow-batched cascade kernel over a 4,129-URL corpus covering
     every reachable rule (parsers/url_query.py:216-5916,
     url_page.py:60-2711, url_offset.py:60-571 as DATA; engine =
-    operators/cascade.py — all three plans equality-tested in
+    operators/cascade.py, gated against the same goldens in
     tests/test_reference_rules.py)."""
     from archive_query_log_spark.operators.cascade import apply_cascade_array
     from archive_query_log_spark.operators.rule_tables import reference_rules_df

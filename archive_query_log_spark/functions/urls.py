@@ -361,7 +361,7 @@ def normalize_http_url(url: Column | str) -> Column:
       ones like 'q=100%' — preserved byte-for-byte (pydantic keeps them raw)
 
     Pure column expressions (JVM intrinsics, codegen-friendly) — run this
-    over the raw frontier BEFORE apply_cascade_* so anchored url_patterns
+    over the raw frontier BEFORE apply_cascade_array so anchored url_patterns
     match exactly what the reference matched. Components are carved out
     with regexes rather than Java's URI parser: parse_url would reject the
     whole URL on one malformed escape, and the lenient_url shim would

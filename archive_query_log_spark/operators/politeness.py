@@ -9,12 +9,12 @@ crawl-delay window, higher-scored URLs first. The north_rule adds robots.txt
 rules + per-host crawl delay as a first-class rules table.
 
 Scale design:
-- The per-host ranking is a window over ``host`` — a skewed shuffle when one
-  host owns 30%+ of the frontier. ``salt_partitions`` > 1 enables a two-phase
-  exact top-k: rank within (host, salt) first, keep only ranks ≤ budget, then
-  re-rank the survivors per host. The heavy first phase spreads the hot host
-  over N partitions; the second phase sees ≤ salt·budget rows per host.
-  Semantics are exactly identical to the unsalted plan (proved in tests).
+- A naive per-host ranking is a window over ``host`` — a skewed shuffle when
+  one host owns 30%+ of the frontier. ``schedule`` instead ranks in two
+  phases: per-(host, score bucket) counts give each bucket its offset, then
+  each bucket is ranked on its own, so a hot host becomes many balanced
+  tasks over ONE data shuffle, and a budget prunes whole buckets. The rank
+  is exactly the per-host window's (proved in tests).
 - All ordering keys are deterministic and partition-invariant (md5-based
   score, url_key tiebreak): the schedule is byte-identical at local[8] and
   local[32] — the BASELINE.json reproducibility requirement.

@@ -6,28 +6,24 @@ DATA extracted verbatim from the reference's public, MIT-licensed tables
 (/root/reference/archive_query_log/parsers/url_query.py:216-5916,
 url_page.py:60-2711, url_offset.py:60-571) by
 ``tools/extract_reference_rules.py``. This module turns them into
-
-- a rules DataFrame for
-  :func:`archive_query_log_spark.operators.cascade.apply_cascade_array`
-  (the production plan: the table is collected once and runs as one
-  Arrow-batched Python kernel; per-row cost = rules-per-provider), and
-- ``UrlRule`` lists for :func:`compile_cascade` (the unrolled-coalesce plan,
-  useful for small per-provider subsets).
+``UrlRule`` lists (``reference_rules``) and rules DataFrames (``rules_df``)
+for :func:`archive_query_log_spark.operators.cascade.apply_cascade_array`,
+which collects the table once and runs it as one Arrow-batched Python
+kernel (per-row cost = rules-per-provider).
 
 Match-semantics shim: the reference applies ``url_pattern`` with
 ``re.match`` (anchored at position 0, url_query.py:54-58); ``re.search``
-(the apply_cascade_array kernel), Spark ``rlike`` and DuckDB
-``regexp_matches`` are find-anywhere, so every pattern is wrapped
-as ``^(?:...)`` here (wrapping, not just prefixing, keeps top-level
-alternations anchored).
+(the apply_cascade_array kernel) and DuckDB ``regexp_matches`` are
+find-anywhere, so every pattern is wrapped as ``^(?:...)`` here (wrapping,
+not just prefixing, keeps top-level alternations anchored).
 
 Input-normalization precondition: the reference matches against
 ``capture.url.encoded_string()`` — pydantic's WHATWG-normalized form
 (lowercased/punycoded host, default '/' path, default port stripped), NOT
 the raw URL (url_query.py:56). Feed raw frontier URLs through
 ``functions.urls.normalize_http_url`` (pure columns; ASCII hosts) or
-``normalize_http_url_udf`` (pydantic-exact) before apply_cascade_*, or an
-anchored pattern the reference would match can miss
+``normalize_http_url_udf`` (pydantic-exact) before apply_cascade_array, or
+an anchored pattern the reference would match can miss
 (e.g. ``https://Google.com?q=x``). Raw-variant parity gate:
 tests/test_reference_rules.py::test_cascade_on_raw_urls_via_normalization.
 """
@@ -91,24 +87,48 @@ def load_rule_rows(table: str) -> tuple[dict, ...]:
     return tuple(doc["rules"])
 
 
-def reference_rules_df(spark: SparkSession, table: str) -> DataFrame:
-    """Rule table as a (tiny) DataFrame with url_pattern wrapped for
-    find-anywhere engines — feed straight to apply_cascade_array (or
-    apply_cascade_join).
-    """
-    records = [
-        {
-            "rule_order": r["rule_order"],
-            "rule_type": r["rule_type"],
-            "argument": r["argument"],
-            "provider_id": r["provider_id"],
-            "url_pattern": match_anchored(r["url_pattern"]),
-            "remove_pattern": r["remove_pattern"],
-            "space_pattern": r["space_pattern"],
-        }
+def reference_rules(table: str) -> list[UrlRule]:
+    """One of RULE_TABLES as UrlRules in cascade order, url_pattern
+    anchored."""
+    return [
+        UrlRule(
+            rule_type=r["rule_type"],
+            argument=(
+                int(r["argument"])
+                if r["rule_type"] == "path_segment"
+                else r["argument"]
+            ),
+            provider_id=r["provider_id"],
+            url_pattern=match_anchored(r["url_pattern"]),
+            remove_pattern=r["remove_pattern"],
+            space_pattern=r["space_pattern"],
+        )
         for r in load_rule_rows(table)
     ]
+
+
+def rules_df(spark: SparkSession, rules: list[UrlRule]) -> DataFrame:
+    """Rule list as a (tiny) DataFrame for apply_cascade_array; list
+    position is rule_order, the cascade precedence."""
+    records = [
+        {
+            "rule_order": i,
+            "rule_type": r.rule_type,
+            "argument": str(r.argument),
+            "provider_id": r.provider_id,
+            "url_pattern": r.url_pattern,
+            "remove_pattern": r.remove_pattern,
+            "space_pattern": r.space_pattern,
+        }
+        for i, r in enumerate(rules)
+    ]
     return local_json_df(spark, records, RULES_DF_SCHEMA)
+
+
+def reference_rules_df(spark: SparkSession, table: str) -> DataFrame:
+    """One of RULE_TABLES as a rules DataFrame, url_pattern anchored (every
+    rule file's rule_order is its list position)."""
+    return rules_df(spark, reference_rules(table))
 
 
 PROVIDERS_DF_SCHEMA = (
@@ -148,26 +168,3 @@ def reference_providers_df(spark: SparkSession) -> DataFrame:
     # round-7 fix: 0.23 s → 0.13 s; the JSON literal removes the Python
     # boundary entirely: → ~0.06 s per rebuild)
     return local_json_df(spark, records, PROVIDERS_DF_SCHEMA)
-
-
-def reference_rules(table: str, provider_id: str | None = None) -> list[UrlRule]:
-    """Rule list for compile_cascade, optionally filtered to one provider."""
-    out = []
-    for r in load_rule_rows(table):
-        if provider_id is not None and r["provider_id"] != provider_id:
-            continue
-        out.append(
-            UrlRule(
-                rule_type=r["rule_type"],
-                argument=(
-                    int(r["argument"])
-                    if r["rule_type"] == "path_segment"
-                    else r["argument"]
-                ),
-                provider_id=r["provider_id"],
-                url_pattern=match_anchored(r["url_pattern"]),
-                remove_pattern=r["remove_pattern"],
-                space_pattern=r["space_pattern"],
-            )
-        )
-    return out

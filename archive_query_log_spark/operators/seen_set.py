@@ -825,14 +825,14 @@ def filtered_new(
     Pass False only when ``batch`` is already materialized."""
     if shards is None or seen is None:
         return exact_new(batch, seen, key_col)
-    probed, bc = _probe_with_layout(
-        batch, _with_position_layout(shards), key_col, n_buckets,
-        broadcast_shards, ("bits", "m", "k", "pl"), _bloom_kernel,
-        _bloom_size_bytes, shard_size_bytes=shard_size_bytes,
+    bcs: list = []
+    probed = bloom_probe(
+        batch, shards, key_col, n_buckets, broadcast_shards,
+        shard_size_bytes=shard_size_bytes, broadcast_out=bcs,
     )
     if checkpoint:
         probed = probed.localCheckpoint()
-        if bc is not None:
+        for bc in bcs:
             bc.unpersist(blocking=False)
     definitely_new = probed.where(~F.col("maybe_seen")).drop("maybe_seen", "bucket")
     suspects = probed.where(F.col("maybe_seen")).drop("maybe_seen", "bucket")

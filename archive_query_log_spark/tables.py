@@ -8,9 +8,11 @@ module so a real Iceberg catalog can replace it by swapping
 ``SnapshotTable`` for ``spark.read/writeTo(...)`` calls (SURVEY.md §7.3e).
 
 Guarantees used by the crawler (SURVEY.md §2.11):
-- a commit is visible iff its manifest JSON was atomically renamed into
+- a commit is visible iff its manifest JSON was atomically linked into
   ``_snapshots/`` — a killed run leaves at most orphan data files, never a
   torn table;
+- publishing never overwrites: of two writers committing on the same
+  parent, the second raises ``CommitConflict``;
 - readers always see the latest *committed* snapshot → deterministic resume;
 - every manifest records op + row_count + lineage metadata (wave id,
   parent snapshot), giving the per-wave lineage the north_rule asks for.
@@ -36,6 +38,11 @@ def bucket_of(key: Column | str, n_buckets: int) -> Column:
     the manifest so every writer/reader agrees)."""
     c = F.col(key) if isinstance(key, str) else key
     return F.pmod(F.xxhash64(c.cast("string")), F.lit(n_buckets)).cast("int")
+
+
+class CommitConflict(RuntimeError):
+    """Another writer published the snapshot version this commit read as
+    next; re-read the table and retry."""
 
 
 class SnapshotTable:
@@ -71,6 +78,28 @@ class SnapshotTable:
     def exists(self) -> bool:
         return self.latest_version() is not None
 
+    def _publish(self, manifest: dict[str, Any]) -> int:
+        """Make ``manifest`` the snapshot of its version, atomically and at
+        most once. The manifest is written in full to a temp file that is
+        then hard-linked to ``v<version>.json``; the link fails if that
+        name exists, so two writers that derived the same version from
+        the same parent cannot overwrite each other (Iceberg's
+        optimistic-concurrency rule). The loser gets ``CommitConflict``;
+        its data files stay unreferenced until ``remove_orphans``."""
+        version = manifest["version"]
+        tmp = self.snap_dir / f".v{version}.json.tmp.{uuid.uuid4().hex[:6]}"
+        tmp.write_text(json.dumps(manifest, indent=1))
+        try:
+            os.link(tmp, self.snap_dir / f"v{version}.json")
+        except FileExistsError:
+            raise CommitConflict(
+                f"{self.path}: v{version} was published by another writer "
+                f"(both read parent v{manifest['parent']})"
+            ) from None
+        finally:
+            tmp.unlink()
+        return version
+
     def commit(
         self,
         df: DataFrame,
@@ -89,7 +118,7 @@ class SnapshotTable:
         dict`` invoked AFTER the data write with a DataFrame re-read from
         the just-written files (so the input plan is never executed twice);
         its result is merged into the manifest's meta before the atomic
-        rename. Use it to stash snapshot-static statistics (e.g. the
+        publish. Use it to stash snapshot-static statistics (e.g. the
         seen-set shard table's summed blob bytes) that readers would
         otherwise recompute with a Spark job per use."""
         assert op in ("append", "overwrite")
@@ -126,10 +155,7 @@ class SnapshotTable:
             "committed_at": time.time(),
             "meta": meta,
         }
-        tmp = self.snap_dir / f".v{version}.json.tmp.{uuid.uuid4().hex[:6]}"
-        tmp.write_text(json.dumps(manifest, indent=1))
-        os.replace(tmp, self.snap_dir / f"v{version}.json")
-        return version
+        return self._publish(manifest)
 
     # -- bucketed commits (partition-pruned MERGE support) -------------------
 
@@ -195,10 +221,7 @@ class SnapshotTable:
             "committed_at": time.time(),
             "meta": meta or {},
         }
-        tmp = self.snap_dir / f".v{version}.json.tmp.{uuid.uuid4().hex[:6]}"
-        tmp.write_text(json.dumps(manifest, indent=1))
-        os.replace(tmp, self.snap_dir / f"v{version}.json")
-        return version
+        return self._publish(manifest)
 
     def bucket_info(
         self, version: int | None = None
@@ -314,7 +337,7 @@ class SnapshotTable:
     def remove_orphans(self, older_than_s: float = 0.0) -> list[str]:
         """Delete top-level data dirs referenced by NO committed snapshot —
         the debris of killed runs (``commit`` writes data files before the
-        manifest rename, so a crash strands exactly one unreferenced dir)
+        manifest publish, so a crash strands exactly one unreferenced dir)
         and of crash-interrupted ``expire_snapshots``.
 
         ``older_than_s`` skips dirs younger than the given age — the
@@ -365,10 +388,7 @@ class SnapshotTable:
         for k in ("bucket_key", "n_buckets", "buckets"):
             if k in m:
                 manifest[k] = m[k]
-        tmp = self.snap_dir / f".v{version}.json.tmp.{uuid.uuid4().hex[:6]}"
-        tmp.write_text(json.dumps(manifest, indent=1))
-        os.replace(tmp, self.snap_dir / f"v{version}.json")
-        return version
+        return self._publish(manifest)
 
     def compact(
         self,

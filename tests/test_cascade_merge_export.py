@@ -8,6 +8,7 @@ from datetime import datetime, timezone
 from pyspark.sql import functions as F
 
 from archive_query_log_spark.operators import cascade, merge
+from archive_query_log_spark.operators.rule_tables import rules_df
 from archive_query_log_spark.sources import export
 from archive_query_log_spark.tables import SnapshotTable
 
@@ -23,31 +24,34 @@ CASCADE_GOLDEN = [
 ]
 
 
+def _apply_fixture_cascades(spark, df):
+    """The fixture query and page cascades → ``query`` (with winning rule
+    ``q_rule``) and ``page`` columns."""
+    out = cascade.apply_cascade_array(
+        df, rules_df(spark, cascade.FIXTURE_QUERY_RULES),
+        F.col("url"), F.col("provider"), out_rule_col="q_rule",
+    )
+    return cascade.apply_cascade_array(
+        out, rules_df(spark, cascade.FIXTURE_PAGE_RULES),
+        F.col("url"), F.col("provider"), out_col="page", as_int=True,
+    )
+
+
 def test_cascade_golden(spark):
     df = spark.createDataFrame(
         [(p, u) for p, u, _, _ in CASCADE_GOLDEN], "provider string, url string"
     )
-    out = df.select(
-        "provider",
-        "url",
-        cascade.compile_cascade(
-            cascade.FIXTURE_QUERY_RULES, F.col("url"), F.col("provider")
-        ).alias("query"),
-        cascade.compile_cascade(
-            cascade.FIXTURE_PAGE_RULES, F.col("url"), F.col("provider"), as_int=True
-        ).alias("page"),
-    ).collect()
+    out = _apply_fixture_cascades(spark, df).collect()
     got = {(r["provider"], r["url"]): (r["query"], r["page"]) for r in out}
     for p, u, q, pg in CASCADE_GOLDEN:
         assert got[(p, u)] == (q, pg), (p, u)
 
 
 def test_cascade_array_kernel_equals_coalesce_plan(spark):
-    """apply_cascade_array (the Arrow-batched kernel production runs) on the
-    fixture tables — the only ones with a universal rule — agrees with the
-    coalesce plan and the goldens, incl. null-url and null-provider rows
-    (a null provider still gets the universal rules) and the winning rule
-    index."""
+    """apply_cascade_array on the fixture tables — the only ones with a
+    universal rule — reproduces the goldens, incl. null-url and
+    null-provider rows (a null provider still gets the universal rules),
+    the output types and the winning rule index."""
     extra = [
         (None, "https://x.example/?search=no+provider", "no provider", None),
         ("alpha", None, None, None),
@@ -59,29 +63,13 @@ def test_cascade_array_kernel_equals_coalesce_plan(spark):
         [(i, p, u) for i, (p, u, _, _) in enumerate(rows)],
         "rid long, provider string, url string",
     )
-    out = cascade.apply_cascade_array(
-        df, cascade.rules_to_df(spark, cascade.FIXTURE_QUERY_RULES),
-        F.col("url"), F.col("provider"), out_rule_col="q_rule",
-    )
-    out = cascade.apply_cascade_array(
-        out, cascade.rules_to_df(spark, cascade.FIXTURE_PAGE_RULES),
-        F.col("url"), F.col("provider"), out_col="page", as_int=True,
-    ).select(
-        "rid", "query", "page", "q_rule",
-        cascade.compile_cascade(
-            cascade.FIXTURE_QUERY_RULES, F.col("url"), F.col("provider")
-        ).alias("cq"),
-        cascade.compile_cascade(
-            cascade.FIXTURE_PAGE_RULES, F.col("url"), F.col("provider"),
-            as_int=True,
-        ).alias("cp"),
-    )
+    out = _apply_fixture_cascades(spark, df)
     assert dict(out.dtypes)["page"] == "bigint"
     assert dict(out.dtypes)["q_rule"] == "int"
     got = {r["rid"]: r for r in out.collect()}
     for i, (_, _, q, pg) in enumerate(rows):
         r = got[i]
-        assert (r["query"], r["page"]) == (q, pg) == (r["cq"], r["cp"]), (i, r)
+        assert (r["query"], r["page"]) == (q, pg), (i, r)
     assert [got[i]["q_rule"] for i in range(len(rows))] == [
         0, 1, 2, 3, 4, None, 4, None, None, 4,
     ]
@@ -96,47 +84,10 @@ def test_cascade_array_kernel_equals_coalesce_plan(spark):
         "provider string, url string",
     )
     r = cascade.apply_cascade_array(
-        both, cascade.rules_to_df(spark, rules), F.col("url"), F.col("provider"),
+        both, rules_df(spark, rules), F.col("url"), F.col("provider"),
         out_rule_col="rule",
     ).first()
     assert (r["query"], r["rule"]) == ("universal", 0)
-
-
-def test_cascade_join_plan_equals_coalesce_plan(spark):
-    """apply_cascade_join (the 972-rule-scale plan) must produce exactly the
-    coalesce plan's results — incl. percent decoding, fragment params,
-    remove-patterns, the any-provider fallback, and no-match nulls."""
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(i, p, u) for i, (p, u, _, _) in enumerate(CASCADE_GOLDEN)],
-        "rid long, provider string, url string",
-    )
-    a = df.select(
-        "rid",
-        cascade.compile_cascade(
-            cascade.FIXTURE_QUERY_RULES, F.col("url"), F.col("provider")
-        ).alias("query"),
-    )
-    rdf = cascade.rules_to_df(spark, cascade.FIXTURE_QUERY_RULES)
-    b = cascade.apply_cascade_join(
-        df, rdf, F.col("url"), F.col("provider"), "rid"
-    ).select("rid", "query")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-    # int-valued cascade too
-    ai = df.select(
-        "rid",
-        cascade.compile_cascade(
-            cascade.FIXTURE_PAGE_RULES, F.col("url"), F.col("provider"),
-            as_int=True,
-        ).alias("page"),
-    )
-    rdfp = cascade.rules_to_df(spark, cascade.FIXTURE_PAGE_RULES)
-    bi = cascade.apply_cascade_join(
-        df, rdfp, F.col("url"), F.col("provider"), "rid", out_col="page",
-        as_int=True,
-    ).select("rid", "page")
-    assert sorted(map(tuple, ai.collect())) == sorted(map(tuple, bi.collect()))
 
 
 def test_upsert_create_if_absent(spark):

@@ -127,6 +127,24 @@ def test_validate_rows_multi_chunk_parity():
     _assert_matches_scalar(_parity_rows(), chunk=7)
 
 
+def test_validate_rows_tiny_images_get_scalar_verdicts():
+    """Images narrower or shorter than the 8×8 phash grid are a 422
+    verdict in validate_row; the batched path must return the same
+    verdicts, not raise for the whole batch."""
+    rows = []
+    for iid, w, h in (("img-tiny-4x4", 4, 4), ("img-tiny-7x12", 7, 12)):
+        for fmt in ("png", "jpeg"):
+            px = codec.synth_pixels(iid, w, h)
+            rows.append(
+                (iid, codec.encode(px, fmt), w, h, fmt,
+                 codec.synth_caption(iid), 0)
+            )
+    rows += _parity_rows()[:20]  # tiny groups beside regular ones
+    _assert_matches_scalar(rows)
+    for iid, buf, w, h, fmt, cap, ph in rows[:4]:
+        assert codec.validate_row(buf, iid, w, h, fmt, cap, ph)[0] == 422
+
+
 def test_validate_rows_rejects_non_positive_chunk():
     """chunk=0 is not "adaptive": only None is."""
     rows = _parity_rows()[:3]

@@ -24,7 +24,7 @@ def test_crawl_converges_and_validates(spark, fixtures):
     root = tempfile.mkdtemp(prefix="t_crawl_")
     try:
         state = pipeline.init_state(root, frontier)
-        cfg = pipeline.CrawlConfig(budget_waves=32, salt_partitions=4)
+        cfg = pipeline.CrawlConfig(budget_waves=32)
         stats = pipeline.run(spark, state, images, robots, cfg, max_rounds=6)
         assert stats and stats[0]["fetched"] > 0
         fetches = state.fetches.read(spark)

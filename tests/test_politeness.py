@@ -1,5 +1,5 @@
-"""Politeness scheduler: budget, robots rules, crawl delays, and the
-salted-ranking equivalence proof."""
+"""Politeness scheduler: budget, robots rules, crawl delays, and parity
+with a per-host rate-limiter simulation."""
 
 from pyspark.sql import functions as F
 
@@ -8,7 +8,7 @@ from archive_query_log_spark.functions.ids import worklist_score
 from archive_query_log_spark.operators import politeness, seen_set
 
 
-def _scheduled(spark, salt_partitions=1, budget=8):
+def _scheduled(spark, budget=8):
     frontier = synth.synth_frontier(spark, 2000, 300, 8)
     cand = frontier.withColumn(
         "score",
@@ -21,7 +21,6 @@ def _scheduled(spark, salt_partitions=1, budget=8):
     return politeness.schedule(
         allowed.withColumn("t0", F.to_timestamp(F.lit("2024-01-01 00:00:00"))),
         budget_waves=budget,
-        salt_partitions=salt_partitions,
     )
 
 
@@ -80,15 +79,6 @@ def test_crawl_delay_applied(spark):
     ).collect()
     for r in hot:  # hot host fast lane: /img delay 2 s
         assert r["dispatch_ts"].second == 2
-
-
-def test_salted_schedule_identical_to_unsalted(spark):
-    plain = _scheduled(spark, salt_partitions=1)
-    salted = _scheduled(spark, salt_partitions=8)
-    key = lambda r: (r["host"], r["wave"], r["url_key"])  # noqa: E731
-    a = sorted(map(key, plain.select("host", "wave", "url_key").collect()))
-    b = sorted(map(key, salted.select("host", "wave", "url_key").collect()))
-    assert a == b
 
 
 def test_host_without_rules_gets_defaults(spark):

@@ -1,4 +1,5 @@
-"""Parity goldens: the Spark cascade over the reference's REAL rule tables
+"""Parity goldens: the URL cascade (``apply_cascade_array``) over the
+reference's REAL rule tables
 (972 url→query + 425 url→page + 66 url→offset rules) must reproduce the
 reference parser's output on a 4,100-URL corpus.
 
@@ -29,15 +30,8 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from archive_query_log_spark.operators.cascade import (
-    apply_cascade_array,
-    apply_cascade_join,
-    compile_cascade,
-)
-from archive_query_log_spark.operators.rule_tables import (
-    reference_rules,
-    reference_rules_df,
-)
+from archive_query_log_spark.operators.cascade import apply_cascade_array
+from archive_query_log_spark.operators.rule_tables import reference_rules_df
 
 DATA = Path(__file__).resolve().parent.parent / "archive_query_log_spark/data"
 
@@ -60,12 +54,11 @@ def corpus_df(spark, corpus):
 
 
 def _run_cascade(spark, corpus_df, table, as_int):
-    out = apply_cascade_join(
+    out = apply_cascade_array(
         corpus_df,
         reference_rules_df(spark, table),
         url=F.col("url"),
         provider=F.col("provider_id"),
-        id_col="capture_id",
         out_col="value",
         as_int=as_int,
         out_rule_col="rule",
@@ -97,40 +90,6 @@ def test_cascade_matches_reference(spark, corpus, corpus_df, table, field,
         f"{len(mismatches)} mismatches vs reference parses; first 10:\n"
         + "\n".join(repr(m) for m in mismatches[:10])
     )
-
-
-@pytest.mark.parametrize(
-    "table,field,rule_field,as_int",
-    [
-        ("url_query", "url_query", "q_rule", False),
-        ("url_page", "url_page", "p_rule", True),
-        ("url_offset", "url_offset", "o_rule", True),
-    ],
-)
-def test_array_plan_matches_reference(spark, corpus, corpus_df, table, field,
-                                      rule_field, as_int):
-    """The Arrow-batched cascade kernel (per-provider rule lists in one
-    Python UDF) reproduces the reference parses too — same gate as the
-    join plan."""
-    out = apply_cascade_array(
-        corpus_df,
-        reference_rules_df(spark, table),
-        url=F.col("url"),
-        provider=F.col("provider_id"),
-        out_col="value",
-        as_int=as_int,
-        out_rule_col="rule",
-    )
-    got = {
-        r["capture_id"]: (r["value"], r["rule"])
-        for r in out.select("capture_id", "value", "rule").collect()
-    }
-    bad = [
-        (r["url"], got[r["capture_id"]], (r[field], r[rule_field]))
-        for r in corpus["rows"]
-        if got[r["capture_id"]] != (r[field], r[rule_field])
-    ]
-    assert not bad, f"{len(bad)} mismatches; first 5: {bad[:5]}"
 
 
 def _denormalize(url: str, mode: int) -> str:
@@ -233,36 +192,4 @@ def test_corpus_coverage(corpus):
         assert len(winners) == total - len(dead), (
             f"{table}: {len(winners)} of {total} rules won "
             f"(expected all but dead {sorted(dead)})"
-        )
-
-
-def test_compile_cascade_equals_join_plan_on_reference_rules(
-    spark, corpus, corpus_df
-):
-    """The unrolled-coalesce plan and the broadcast-join plan agree on real
-    reference rules (per-provider subsets keep the coalesce tree small)."""
-    rows = corpus["rows"]
-    providers = sorted({r["provider_id"] for r in rows})[:8]
-    sub_rows = [r for r in rows if r["provider_id"] in providers]
-    sub_df = corpus_df.where(F.col("provider_id").isin(providers))
-    rules = [
-        u
-        for p in providers
-        for u in reference_rules("url_query", provider_id=p)
-    ]
-    compiled = {
-        r["capture_id"]: r["v"]
-        for r in sub_df.select(
-            "capture_id",
-            compile_cascade(
-                rules, F.col("url"), provider=F.col("provider_id")
-            ).alias("v"),
-        ).collect()
-    }
-    assert len(compiled) == len(sub_rows) > 20
-    for r in sub_rows:
-        assert compiled[r["capture_id"]] == r["url_query"], (
-            r["url"],
-            r["url_query"],
-            compiled[r["capture_id"]],
         )

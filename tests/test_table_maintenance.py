@@ -12,7 +12,7 @@ from pathlib import Path
 
 import pytest
 
-from archive_query_log_spark.tables import SnapshotTable
+from archive_query_log_spark.tables import CommitConflict, SnapshotTable
 
 
 def _mk(spark, path, rows, op="append", key=None):
@@ -66,6 +66,28 @@ def test_append_log_expiry_is_metadata_only(spark, tmp_path):
     assert out["expired_versions"] == [0, 1, 2]
     assert out["deleted_dirs"] == []
     assert _rows(spark, t) == before
+
+
+def test_racing_commits_on_one_parent_conflict(spark, tmp_path):
+    """Two writers derive the same next version from the same parent.
+    Writer B publishes while writer A sits between its data write and its
+    manifest publish; A must fail with CommitConflict instead of replacing
+    B's snapshot."""
+    a, b = SnapshotTable(tmp_path / "t"), SnapshotTable(tmp_path / "t")
+    a.commit(spark.createDataFrame([(0, "base")], "k int, v string"))
+
+    def b_commits_first(_written):
+        assert b.commit(spark.createDataFrame([(2, "b")], "k int, v string")) == 1
+        return {}
+
+    with pytest.raises(CommitConflict):
+        a.commit(
+            spark.createDataFrame([(1, "a")], "k int, v string"),
+            post_write_meta=b_commits_first,
+        )
+    assert a._versions() == [0, 1]
+    assert _rows(spark, a) == [(0, "base"), (2, "b")]
+    assert not [p for p in a.snap_dir.iterdir() if p.name.startswith(".")]
 
 
 def test_remove_orphans_collects_killed_run_debris(spark, tmp_path):
@@ -151,7 +173,7 @@ def test_maintain_between_rounds_preserves_crawl_equivalence(spark, tmp_path):
     images = synth.synth_images(spark, 100, 4).cache()
     frontier = synth.synth_frontier(spark, 400, 100, 4).cache()
     robots = synth.synth_robots(spark)
-    cfg = pipeline.CrawlConfig(budget_waves=16, salt_partitions=4)
+    cfg = pipeline.CrawlConfig(budget_waves=16)
 
     def fetch_sig(state):
         r = (
